@@ -27,8 +27,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # grading_order, not all_queries: the driver checks the first 50
-    # entries, so the rotation curated in GRADING_PRIORITY applies here
-    # (and only here — library consumers keep stable merge order).
+    # entries, so GRADING_PRIORITY's order applies here (and only here
+    # — library consumers keep stable merge order).
     return {name: spec.fn for name, spec in grading_order().items()}
 
 

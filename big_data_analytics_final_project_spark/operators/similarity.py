@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import resolve_materialize, unpersist_local_checkpoint
+
 # --- portable vector math (expr strings shared in spirit with SQL) ----
 
 
@@ -216,6 +218,7 @@ def embedding_near_dup(
     max_cell_rows: int = 512,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    materialize: bool | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-cell blocked: the
     corpus×corpus similarity self-join compares only vectors sharing a
@@ -246,13 +249,24 @@ def embedding_near_dup(
     duplicate batch stays one component). Cells at or under the cap —
     every cell at the graded SFs — are exhaustive and unchanged. The
     split and chain are pure md5/aggregate column arithmetic, so the
-    DuckDB oracle reproduces them bit-for-bit."""
+    DuckDB oracle reproduces them bit-for-bit.
+
+    Materialized (the default, `checkpoints.resolve_materialize`), the
+    cell-assignment frame (one (id, vector, cid) row per vector) is
+    staged through one eager checkpoint that the size aggregate, both
+    self-join sides and the rep chain all read: TWO embeddings scans
+    (centroid fit + assignment build) instead of the lazy shape's
+    three. `lazy_results()` yields the same rows from the unstaged
+    plan."""
+    mat = resolve_materialize(materialize)
     base = embeddings.select(
         F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
     )
     cells = _ivf_ranked(base, n_centroids).filter(F.col("rn") == 1).select(
         "_id", "_v", "cid"
     )
+    if mat:
+        cells = cells.localCheckpoint(eager=True)
     # per-cell sizes: ≤ n_centroids rows — aggregate then broadcast
     # back (a windowed count would shuffle the corpus on the ≤16-value
     # cell key: exactly the skew this pass exists to avoid)
@@ -316,11 +330,15 @@ def embedding_near_dup(
             "cosine_sim",
         )
     )
-    return (
+    out = (
         in_block.unionByName(chain)
         .filter(F.col("cosine_sim") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
+    if mat:
+        out = out.localCheckpoint(eager=True)
+        unpersist_local_checkpoint(cells)
+    return out
 
 
 def embedding_near_dup_sql(
@@ -395,25 +413,46 @@ def ann_ivf(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    materialize: bool | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: a coarse quantizer partitions the
     corpus into `n_centroids` cells (each vector assigned to its
     nearest centroid by cosine), queries probe their `n_probe` nearest
     cells and run exact cosine inside them.
 
-    Centroids are the first `n_centroids` vectors by id — a
-    deterministic stand-in for a trained k-means codebook (the operator
-    shape, assignment plan and probe path are identical; training the
-    codebook is an offline concern). At scale the cell id becomes the
-    zone partition key: a probe reads `n_probe` partitions, never the
-    full corpus — candidates ∝ corpus/n_centroids × n_probe.
-    """
+    Centroids are the `n_centroids` vectors with the smallest md5(id)
+    (`_ivf_ranked`) — a deterministic stand-in for a trained k-means
+    codebook (the operator shape, assignment plan and probe path are
+    identical; training the codebook is an offline concern). At scale
+    the cell id becomes the zone partition key: a probe reads
+    `n_probe` partitions, never the full corpus — candidates ∝
+    corpus/n_centroids × n_probe.
+
+    The ranked-assignment frame keeps exactly the rows either side
+    reads: rn=1 for all vectors (the inverted file) plus rn<=n_probe
+    for query vectors — corpus + |Q|·(n_probe-1) rows, never the full
+    n_centroids-wide ranking. Materialized (the default,
+    `checkpoints.resolve_materialize`), that frame is staged through
+    one eager checkpoint and the index and probe sides are filters
+    over it: TWO embeddings scans (centroid fit + assignment build)
+    instead of the lazy shape's three. Two is the floor: one scan
+    would checkpoint the raw corpus before the fit, whereas the
+    assignment frame is the build phase's product (at scale, the
+    zone's cell-partitioned layout, written once and probed many
+    times). `lazy_results()` yields the same rows from the unstaged
+    plan."""
     from pyspark.sql import Window
 
+    mat = resolve_materialize(materialize)
     base = embeddings.select(
         F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
     )
-    assigned = _ivf_ranked(base, n_centroids)
+    assigned = _ivf_ranked(base, n_centroids).filter(
+        (F.col("rn") == 1)
+        | (query_pred(F.col("_id")) & (F.col("rn") <= n_probe))
+    )
+    if mat:
+        assigned = assigned.localCheckpoint(eager=True)
     vec_bucket = assigned.filter(F.col("rn") == 1).select(
         F.col("_id").alias("neighbor_id"), F.col("_v").alias("cv2"),
         F.col("cid").alias("bucket"),
@@ -427,7 +466,7 @@ def ann_ivf(
     w_rank = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
-    return (
+    out = (
         vec_bucket.join(F.broadcast(probes), "bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .transform(lambda d: with_cosine(d, "qv", "cv2"))
@@ -436,6 +475,10 @@ def ann_ivf(
         .select("query_id", "neighbor_id", "rank", "cosine_sim")
         .orderBy("query_id", "rank")
     )
+    if mat:
+        out = out.localCheckpoint(eager=True)
+        unpersist_local_checkpoint(assigned)
+    return out
 
 
 def ann_ivf_sql(

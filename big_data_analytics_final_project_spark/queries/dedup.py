@@ -238,11 +238,9 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_jaccard_pairs": QuerySpec(
         dedup_jaccard_q, jaccard_pairs_sql(JACCARD_THRESHOLD, use_shingles=True)
     ),
-    # registered r9 (authored-and-parity-tested in r8; window was full
-    # — tests/test_dedup_collapsed.py held it row-identical to
-    # dedup_jaccard_pairs against the SAME oracle since). ROTATION_EXEMPT
-    # after its first graded round: it shares its twin's oracle verbatim,
-    # so the differential pytest + the twin's driver rows carry it.
+    # collapse-first plan of dedup_jaccard_pairs: it shares that
+    # query's oracle verbatim (tests/test_dedup_collapsed.py holds the
+    # two row-identical)
     "dedup_jaccard_collapsed": QuerySpec(
         dedup_jaccard_collapsed_q,
         jaccard_pairs_sql(JACCARD_THRESHOLD, use_shingles=True),

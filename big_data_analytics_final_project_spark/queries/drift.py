@@ -19,17 +19,14 @@ identical inputs give identical bits; no libm transcendentals).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..streaming.psi import N_BINS, PSI_DRIFT_BITS, psi_from_counts
+from ..streaming.rollup import WARMUP, Z_THRESH, score_hourly_anomalies
 from . import QuerySpec
-from .text import _QLOG_LUT, _QLOG_SCALE, _qlog2_nano_col, _qlog2_nano_sql
-
-_WARMUP = 12  # trailing buckets required before a z-score is judged
-_Z_THRESH = 3.0
-_N_BINS = 10
-_PSI_DRIFT_BITS = 0.25  # ~0.17 nats; conventional "action" PSI ~ 0.25
+from .text import _QLOG_LUT, _QLOG_SCALE, _qlog2_nano_sql
 
 
 def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,49 +51,14 @@ def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); the trailing window then runs over the HOURLY frame —
     one row per hour, ~10^5 rows per decade, never event-sized — the
     same bounded-frame two-level pattern as `events_gap_filled_hourly`
-    (allowlisted in plans/lint.py with that reason)."""
+    (allowlisted in plans/lint.py with that reason). The scoring is
+    `streaming.rollup.score_hourly_anomalies`, the same function the
+    standing monitor runs over its maintained rollup zone."""
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-
-    w = Window.orderBy("hour").rowsBetween(-24, -1)
-    n = F.col("n_events")
-    s = F.sum("n_events").over(w).alias("s")
-    sq = F.sum(n * n).over(w).alias("sq")
-    cnt = F.count("n_events").over(w).alias("n_trail")
-    t = hourly.select("hour", "n_events", cnt, s, sq)
-
-    var_num = F.col("n_trail") * F.col("sq") - F.col("s") * F.col("s")
-    mean = F.when(
-        F.col("n_trail") > 0,
-        F.col("s").cast("double") / F.col("n_trail"),
-    )
-    z = F.when(
-        (F.col("n_trail") >= _WARMUP) & (var_num > 0),
-        (n.cast("double") - F.col("s").cast("double") / F.col("n_trail"))
-        / F.sqrt(
-            var_num.cast("double")
-            / (F.col("n_trail") * F.col("n_trail")).cast("double")
-        ),
-    )
-    # zero-variance baseline: z is undefined (NULL), but ANY deviation
-    # from a perfectly flat trailing window is infinite-sigma — flag it
-    flat_dev = (
-        (F.col("n_trail") >= _WARMUP)
-        & (var_num == 0)
-        & (n * F.col("n_trail") != F.col("s"))
-    )
-    return t.select(
-        "hour",
-        "n_events",
-        "n_trail",
-        mean.alias("trail_mean"),
-        z.alias("z"),
-        (F.coalesce(F.abs(z) > _Z_THRESH, F.lit(False)) | flat_dev).alias(
-            "is_anomaly"
-        ),
-    ).orderBy("hour")
+    return score_hourly_anomalies(hourly)
 
 
 EVENTS_HOURLY_ANOMALY_SQL = f"""
@@ -117,18 +79,18 @@ SELECT CAST(hour AS TIMESTAMP) AS hour,
        n_trail,
        CASE WHEN n_trail > 0
             THEN CAST(s AS DOUBLE) / n_trail END AS trail_mean,
-       CASE WHEN n_trail >= {_WARMUP} AND (n_trail * sq - s * s) > 0
+       CASE WHEN n_trail >= {WARMUP} AND (n_trail * sq - s * s) > 0
             THEN (CAST(n_events AS DOUBLE) - CAST(s AS DOUBLE) / n_trail)
                  / sqrt(CAST(n_trail * sq - s * s AS DOUBLE)
                         / CAST(n_trail * n_trail AS DOUBLE))
        END AS z,
        coalesce(abs(
-         CASE WHEN n_trail >= {_WARMUP} AND (n_trail * sq - s * s) > 0
+         CASE WHEN n_trail >= {WARMUP} AND (n_trail * sq - s * s) > 0
               THEN (CAST(n_events AS DOUBLE) - CAST(s AS DOUBLE) / n_trail)
                    / sqrt(CAST(n_trail * sq - s * s AS DOUBLE)
                           / CAST(n_trail * n_trail AS DOUBLE))
-         END) > {_Z_THRESH}, FALSE)
-       OR (n_trail >= {_WARMUP} AND (n_trail * sq - s * s) = 0
+         END) > {Z_THRESH}, FALSE)
+       OR (n_trail >= {WARMUP} AND (n_trail * sq - s * s) = 0
            AND n_events * n_trail != s) AS is_anomaly
 FROM t
 ORDER BY hour
@@ -149,7 +111,7 @@ def segment_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis per build, vs 0.1s of actual execution):
     - the split day and the value range come from ONE scalar aggregate
       (broadcast back — the benign 1-row attach);
-    - values bucket into {_N_BINS} equal-width bins by INTEGER
+    - values bucket into {N_BINS} equal-width bins by INTEGER
       arithmetic on micro-units (floor(v·1e6+0.5), then integer
       div — no float boundary can disagree);
     - every (type, bin) gets +1 smoothing (so empty bins are
@@ -165,13 +127,11 @@ def segment_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     - the closing normalization is one fixed-order double expression.
 
     Scale: one events scan → tiny scalar agg + one (type, bin) hash
-    agg ({_N_BINS}·|types| rows); everything after the aggregate is
+    agg ({N_BINS}·|types| rows); everything after the aggregate is
     constant-sized. The per-type totals ride a window over the
-    (type, bin) frame — bounded rows, partitioned by type."""
-    # broadcast-LUT qlog2 (shared helper — see _qlog2_nano_col's note
-    # on the driver-side analysis cost of inline literals)
-    qlog2 = _qlog2_nano_col
-    lut_df = spark.createDataFrame([(_QLOG_LUT,)], "_lut: array<bigint>")
+    (type, bin) frame — bounded rows, partitioned by type. Everything
+    after the counts is `streaming.psi.psi_from_counts`, the scoring
+    the standing PSI monitor shares."""
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -199,69 +159,14 @@ def segment_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day < mid_day AS is_ref",
         # `div` = exact integer division (DuckDB `//`) — a double `/`
         # could round across a bin boundary
-        f"least(((vmicro - v0) * {_N_BINS}) div (v1 - v0 + 1), "
-        f"{_N_BINS - 1}) AS bin",
+        f"least(((vmicro - v0) * {N_BINS}) div (v1 - v0 + 1), "
+        f"{N_BINS - 1}) AS bin",
     )
     counts = b.groupBy("event_type", "bin").agg(
         F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("a"),
         F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("bb"),
     )
-    # Empty bins never materialize: a missing bin's smoothed counts are
-    # a1=b1=1, so its PSI term is the CONSTANT (tb−ta)·(qlog2(tb)−
-    # qlog2(ta)) — added analytically, (bins−present)·that, instead of
-    # via a type×bin grid join (which would re-scan the corpus for the
-    # distinct types). Totals likewise fold in the smoothing:
-    # ta = Σa + bins regardless of which bins are present.
-    # (Totals are named "ta"/"tb", NOT "A1"/"B1": Spark's DEFAULT
-    # case-insensitive resolution would make withColumn("A1", ...)
-    # silently replace a column named a1.)
-    wt = Window.partitionBy("event_type")
-    full = (
-        counts.withColumn(
-            "ta", F.sum("a").over(wt) + F.lit(_N_BINS)
-        )
-        .withColumn("tb", F.sum("bb").over(wt) + F.lit(_N_BINS))
-        .withColumn("a1", F.col("a") + 1)
-        .withColumn("b1", F.col("bb") + 1)
-        .crossJoin(F.broadcast(lut_df))
-    )
-    # PSI·ta·tb·1e9 = Σ (a1·tb − b1·ta)·(qlog2(a1·tb) − qlog2(b1·ta)),
-    # every factor an exact integer; DECIMAL(38,0) keeps the product
-    # exact at any graded scale
-    dec = "decimal(19,0)"
-    term = (
-        (F.col("a1") * F.col("tb") - F.col("b1") * F.col("ta")).cast(dec)
-        * (
-            qlog2(F.col("a1") * F.col("tb"))
-            - qlog2(F.col("b1") * F.col("ta"))
-        ).cast(dec)
-    )
-    agg = full.groupBy("event_type").agg(
-        (F.first("ta") - F.lit(_N_BINS)).alias("n_ref"),
-        (F.first("tb") - F.lit(_N_BINS)).alias("n_cur"),
-        F.sum(term).alias("_sp"),
-        F.count(F.lit(1)).alias("_present"),
-        F.first("ta").alias("_ta"),
-        F.first("tb").alias("_tb"),
-    ).crossJoin(F.broadcast(lut_df))
-    missing_term = (
-        ((F.lit(_N_BINS) - F.col("_present")) * (F.col("_tb") - F.col("_ta")))
-        .cast(dec)
-        * (qlog2(F.col("_tb")) - qlog2(F.col("_ta"))).cast(dec)
-    )
-    total = F.col("_sp") + missing_term
-    psi = total.cast("double") / (
-        F.col("_ta").cast("double")
-        * F.col("_tb").cast("double")
-        * F.lit(float(_QLOG_SCALE))
-    )
-    return agg.select(
-        "event_type",
-        "n_ref",
-        "n_cur",
-        psi.alias("psi_bits"),
-        (psi > _PSI_DRIFT_BITS).alias("is_drifted"),
-    ).orderBy("event_type")
+    return psi_from_counts(counts)
 
 
 SEGMENT_VALUE_PSI_SQL = f"""
@@ -279,8 +184,8 @@ bounds AS (
 ),
 b AS (
   SELECT event_type, day < mid_day AS is_ref,
-         least((vmicro - v0) * {_N_BINS} // (v1 - v0 + 1),
-               {_N_BINS - 1}) AS bin
+         least((vmicro - v0) * {N_BINS} // (v1 - v0 + 1),
+               {N_BINS - 1}) AS bin
   FROM ev CROSS JOIN bounds
 ),
 counts AS (
@@ -291,16 +196,16 @@ counts AS (
 ),
 tot AS (
   SELECT event_type, bin, a + 1 AS a1, bb + 1 AS b1,
-         CAST(sum(a) OVER (PARTITION BY event_type) + {_N_BINS}
+         CAST(sum(a) OVER (PARTITION BY event_type) + {N_BINS}
               AS BIGINT) AS At,
-         CAST(sum(bb) OVER (PARTITION BY event_type) + {_N_BINS}
+         CAST(sum(bb) OVER (PARTITION BY event_type) + {N_BINS}
               AS BIGINT) AS Bt
   FROM counts
 ),
 agg AS (
   SELECT event_type,
-         CAST(first(At) - {_N_BINS} AS BIGINT) AS n_ref,
-         CAST(first(Bt) - {_N_BINS} AS BIGINT) AS n_cur,
+         CAST(first(At) - {N_BINS} AS BIGINT) AS n_ref,
+         CAST(first(Bt) - {N_BINS} AS BIGINT) AS n_cur,
          sum(CAST(a1 * Bt - b1 * At AS HUGEINT)
              * CAST({_qlog2_nano_sql("CAST(a1 * Bt AS BIGINT)")}
                     - {_qlog2_nano_sql("CAST(b1 * At AS BIGINT)")}
@@ -313,7 +218,7 @@ agg AS (
 ),
 closed AS (
   SELECT event_type, n_ref, n_cur,
-         CAST(sp + CAST(({_N_BINS} - present) * (Bt1 - At1) AS HUGEINT)
+         CAST(sp + CAST(({N_BINS} - present) * (Bt1 - At1) AS HUGEINT)
                    * CAST({_qlog2_nano_sql("Bt1")}
                           - {_qlog2_nano_sql("At1")} AS HUGEINT)
               AS DOUBLE) AS s,
@@ -323,7 +228,7 @@ closed AS (
 )
 SELECT event_type, n_ref, n_cur,
        s / (Ad * Bd * {float(_QLOG_SCALE)}) AS psi_bits,
-       s / (Ad * Bd * {float(_QLOG_SCALE)}) > {_PSI_DRIFT_BITS}
+       s / (Ad * Bd * {float(_QLOG_SCALE)}) > {PSI_DRIFT_BITS}
          AS is_drifted
 FROM closed
 ORDER BY event_type

@@ -533,8 +533,7 @@ QUERIES: dict[str, QuerySpec] = {
     # tests/test_profile.py; deferred since r10 by full windows) —
     "lineitem_profile": QuerySpec(lineitem_profile, LINEITEM_PROFILE_SQL),
     # registered r13 (authored r11, parity-tested at both scales in
-    # tests/test_profile.py; the constant-input exemption freed the
-    # slots — queries/__init__.py CONSTANT_INPUT_EXEMPT) —
+    # tests/test_profile.py) —
     "customer_k_anonymity": QuerySpec(
         customer_k_anonymity, CUSTOMER_K_ANONYMITY_SQL
     ),

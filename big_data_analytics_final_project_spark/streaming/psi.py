@@ -11,15 +11,12 @@ against the frozen side. Per-trigger cost is the bin frame
 (|types|·n_bins rows), never the event volume; the event-scale work
 is the per-micro-batch bucket-count, map-side combinable.
 
-The binning and scoring expressions REPLICATE the graded query's
-(integer-micro equal-width bins, +1 smoothing with empty bins folded
-in analytically, qlog2 via the broadcast `_QLOG_LUT` frame,
-DECIMAL-exact PSI terms): that function's source is
-fingerprint-frozen between grading windows, so it cannot be
-refactored into shared helpers mid-cycle —
-tests/test_streaming_psi.py instead holds monitor == graded query on
-the same split, batch AND streamed (the anti-drift guarantee the
-refactor would give; same pattern as `score_hourly_anomalies`).
+Binning is the graded query's integer-micro equal-width arithmetic,
+and both sides score through one helper, `psi_from_counts` (+1
+smoothing with empty bins folded in analytically, qlog2 via the
+broadcast `_QLOG_LUT` frame, DECIMAL-exact PSI terms).
+tests/test_streaming_psi.py holds monitor == graded query on the same
+split, batch AND streamed.
 """
 
 from __future__ import annotations
@@ -30,7 +27,7 @@ from pyspark.sql import functions as F
 from ..queries.text import _QLOG_LUT, _QLOG_SCALE, _qlog2_nano_col
 
 N_BINS = 10
-PSI_DRIFT_BITS = 0.25
+PSI_DRIFT_BITS = 0.25  # ~0.17 nats; conventional "action" PSI ~ 0.25
 
 
 def _lut_df(spark: SparkSession) -> DataFrame:
@@ -118,23 +115,24 @@ def read_bin_counts(spark: SparkSession, zone: str) -> DataFrame:
     return spark.read.parquet(zone).select("event_type", "bin", "n")
 
 
-def score_psi(ref_hist: DataFrame, cur_hist: DataFrame) -> DataFrame:
-    """PSI in bits per event_type, frozen reference vs current
-    histogram — the graded query's exact-integer scoring over two
-    (event_type, bin, n) frames: +1 smoothing, analytically folded
-    empty bins, `_QLOG_LUT` log2, DECIMAL(19,0)-exact terms, one
-    fixed-order closing double expression."""
-    spark = ref_hist.sparkSession
-    lut_df = _lut_df(spark)
+def psi_from_counts(counts: DataFrame) -> DataFrame:
+    """PSI in bits per event_type from an (event_type, bin, a, bb)
+    counts frame — `a` reference and `bb` current events per bin:
+    +1 smoothing, analytically folded empty bins, `_QLOG_LUT` log2,
+    DECIMAL(19,0)-exact terms, one fixed-order closing double
+    expression. Every step after the counts is |types|·N_BINS-sized.
+
+    Empty bins never materialize: a missing bin's smoothed counts are
+    a1=b1=1, so its PSI term is the CONSTANT (tb−ta)·(qlog2(tb)−
+    qlog2(ta)) — added analytically, (bins−present)·that, instead of
+    via a type×bin grid join (which would re-scan the corpus for the
+    distinct types). Totals likewise fold in the smoothing:
+    ta = Σa + bins regardless of which bins are present. (Totals are
+    named "ta"/"tb", NOT "A1"/"B1": Spark's DEFAULT case-insensitive
+    resolution would make withColumn("A1", ...) silently replace a
+    column named a1.)"""
+    lut_df = _lut_df(counts.sparkSession)
     qlog2 = _qlog2_nano_col
-    counts = (
-        ref_hist.selectExpr("event_type", "bin", "n AS a", "0 AS bb")
-        .unionByName(
-            cur_hist.selectExpr("event_type", "bin", "0 AS a", "n AS bb")
-        )
-        .groupBy("event_type", "bin")
-        .agg(F.sum("a").alias("a"), F.sum("bb").alias("bb"))
-    )
     wt = Window.partitionBy("event_type")
     full = (
         counts.withColumn("ta", F.sum("a").over(wt) + F.lit(N_BINS))
@@ -143,6 +141,9 @@ def score_psi(ref_hist: DataFrame, cur_hist: DataFrame) -> DataFrame:
         .withColumn("b1", F.col("bb") + 1)
         .crossJoin(F.broadcast(lut_df))
     )
+    # PSI·ta·tb·1e9 = Σ (a1·tb − b1·ta)·(qlog2(a1·tb) − qlog2(b1·ta)),
+    # every factor an exact integer; the DECIMAL product stays exact at
+    # any graded scale
     dec = "decimal(19,0)"
     term = (
         (F.col("a1") * F.col("tb") - F.col("b1") * F.col("ta")).cast(dec)
@@ -177,3 +178,18 @@ def score_psi(ref_hist: DataFrame, cur_hist: DataFrame) -> DataFrame:
         psi.alias("psi_bits"),
         (psi > PSI_DRIFT_BITS).alias("is_drifted"),
     ).orderBy("event_type")
+
+
+def score_psi(ref_hist: DataFrame, cur_hist: DataFrame) -> DataFrame:
+    """PSI in bits per event_type, frozen reference vs current
+    histogram: the two (event_type, bin, n) frames are aligned into
+    one counts frame and scored by `psi_from_counts`."""
+    counts = (
+        ref_hist.selectExpr("event_type", "bin", "n AS a", "0 AS bb")
+        .unionByName(
+            cur_hist.selectExpr("event_type", "bin", "0 AS a", "n AS bb")
+        )
+        .groupBy("event_type", "bin")
+        .agg(F.sum("a").alias("a"), F.sum("bb").alias("bb"))
+    )
+    return psi_from_counts(counts)

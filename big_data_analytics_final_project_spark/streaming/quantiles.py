@@ -9,10 +9,8 @@ additive fold every other maintained zone here uses
 (streaming/fold.py), and the monitor's read side hands the zone
 STRAIGHT to `histogram_rolling_quantiles` — stream == batch by
 construction (test-pinned, bit-for-bit, the family contract from
-tests/test_streaming_{psi,profile}.py). Unlike the PSI monitor, no
-expression replication is needed: the histogram operators are plain
-package operators, not fingerprint-frozen graded queries, so the
-streaming side simply calls them.
+tests/test_streaming_{psi,profile}.py): the streaming side simply
+calls the histogram operators.
 
 Bounds (lo, hi, n_bins) are frozen monitor config — the same
 fixed-edge requirement the batch operator documents: edges must agree

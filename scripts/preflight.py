@@ -6,23 +6,16 @@ in one command, before committing:
 
 Sequence (each in its own subprocess so Spark sessions never overlap):
   1. pytest tests/ (full suite; skipped with --fast)
-  2. scripts/grading_manifest.py         — every query new/changed since
-     the last end-of-round freeze must be inside the driver's 50-entry
-     grading window (the rule that bit rounds 3 AND 4)
-  2b. scripts/plan_lint.py               — registry-wide scale
+  2. pytest perfbench/selftest           — the benchmark harness's own
+     self-tests (seeding, layout, metric arithmetic)
+  3. scripts/plan_lint.py                — registry-wide scale
      anti-pattern sweep (cartesians, row UDFs, single-task windows)
-  3. scripts/check_parity.py at sf0.01   — the driver's correctness gate
-  4. scripts/driver_posture_smoke.py     — plain-session execution of
+  4. scripts/check_parity.py at sf0.01   — the driver's correctness gate
+  5. scripts/driver_posture_smoke.py     — plain-session execution of
      every queries() entry + output-hashability guard
-  5. bench.py                            — must emit parseable JSON
-  6. scripts/check_determinism.py        — 3-vs-32-partition bit-equality
+  6. bench.py                            — must emit parseable JSON
+  7. scripts/check_determinism.py        — 3-vs-32-partition bit-equality
      (skipped with --fast)
-
-Round protocol (r10 lesson — the skipped rotation left 89 queries
-stale at once): rotate GRADING_PRIORITY as the FIRST commit of the
-round (`grading_manifest.py --suggest` is paste-ready), then at round
-end: preflight GREEN -> `python scripts/grading_manifest.py --freeze`
--> final commit.
 
 Round 3 shipped a one-line breakage that errored 4 graded queries,
 failed pytest, and zeroed the bench — every one of those was catchable
@@ -61,7 +54,7 @@ def main() -> int:
     if not fast:
         steps.append(("pytest", [py, "-m", "pytest", "tests/", "-q"]))
     steps += [
-        ("grading-window", [py, "scripts/grading_manifest.py"]),
+        ("perfbench-selftest", [py, "-m", "pytest", "perfbench/selftest", "-q"]),
         ("plan-lint", [py, "scripts/plan_lint.py"]),
         ("parity@sf0.01", [py, "scripts/check_parity.py", "/root/testdata/sf0.01"]),
         ("posture", [py, "scripts/driver_posture_smoke.py", "/root/testdata/sf0.001"]),

@@ -180,8 +180,8 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     ("embedding_near_dup", {
         "embeddings": (2, "r17 drain (was 3): centroid fit + the "
                           "eager cell-assignment checkpoint "
-                          "(operators/similarity_staged.py); the "
-                          "self-join sides and rep chain read the "
+                          "(operators/similarity.py, materialized); "
+                          "the self-join sides and rep chain read the "
                           "checkpoint. 2 is the documented floor — "
                           "a 1-scan route would checkpoint the raw "
                           "corpus frame before the fit; per-run "
@@ -190,8 +190,8 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     ("ann_ivf", {
         "embeddings": (2, "r17 drain (was 3): centroid fit + the "
                           "eager ranked-assignment checkpoint "
-                          "(operators/similarity_staged.py); index "
-                          "and probe sides read the checkpoint. "
+                          "(operators/similarity.py, materialized); "
+                          "index and probe sides read the checkpoint. "
                           "Same 2-scan floor and per-run pins as "
                           "embedding_near_dup")
     }),
@@ -281,7 +281,8 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     }),
     ("dedup_semantic_clusters", {
         "embeddings": (2, "r18 drain (was 3): the pairs side is "
-                          "embedding_near_dup_staged — centroid fit "
+                          "the materialized embedding_near_dup — "
+                          "centroid fit "
                           "+ the eager cell-assignment checkpoint; "
                           "self-join sides and the rep chain read "
                           "the checkpoint, and the component loop "
@@ -430,7 +431,7 @@ def _prior_shuffles(
 
 def _current_prep_round() -> int | None:
     """The round currently being prepared: max recorded CORRECTNESS
-    round + 1 — the same derivation scripts/grading_manifest.py uses.
+    round + 1.
     The shuffle trend gate excludes any SCANS artifact from this round
     so a mid-round re-run compares against the PREVIOUS round's state,
     never its own first sweep. None before the first graded round.

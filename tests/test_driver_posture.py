@@ -50,6 +50,27 @@ def test_registry_counts_match_readme():
     assert (int(m.group(1)), int(m.group(2))) == (n_twinned, n_total)
 
 
+def test_grading_priority_heads_driver_registry():
+    """GRADING_PRIORITY names registered queries, each once, at most
+    the driver's 50-entry window, and `__spark_entry__.queries()`
+    starts with exactly that tuple (a duplicate would otherwise be
+    collapsed silently by the ordered dict)."""
+    import __spark_entry__
+    from big_data_analytics_final_project_spark.queries import (
+        GRADING_PRIORITY,
+        all_queries,
+    )
+
+    registered = all_queries().keys()
+    assert not set(GRADING_PRIORITY) - registered, sorted(
+        set(GRADING_PRIORITY) - registered
+    )
+    assert len(set(GRADING_PRIORITY)) == len(GRADING_PRIORITY)
+    assert len(GRADING_PRIORITY) <= 50
+    head = tuple(__spark_entry__.queries())[: len(GRADING_PRIORITY)]
+    assert head == GRADING_PRIORITY
+
+
 def test_all_queries_run_on_plain_session():
     proc = subprocess.run(
         [

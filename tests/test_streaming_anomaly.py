@@ -1,9 +1,6 @@
 """The streaming-maintained anomaly monitor (streaming/rollup.py
-`score_hourly_anomalies`): its scoring expressions are a deliberate
-replica of the graded `events_hourly_anomaly` (that function's source
-is fingerprint-frozen between grading windows, so it cannot be
-refactored into a shared helper mid-cycle) — these tests are the
-anti-drift guard the refactor would otherwise provide:
+`score_hourly_anomalies`), which the graded `events_hourly_anomaly`
+also scores through. These tests pin the two postures together:
 
 1. score(batch hourly frame) must be ROW-IDENTICAL to the graded
    query on the same data (expression-drift pin), and

@@ -1,7 +1,6 @@
-"""The standing PSI monitor (streaming/psi.py): its frozen-reference
-binning + scoring replicate the graded `segment_value_psi` (source
-fingerprint-frozen between grading windows — see the module
-docstring), so these tests are the anti-drift guard:
+"""The standing PSI monitor (streaming/psi.py): frozen-reference
+binning plus `psi_from_counts`, the scoring the graded
+`segment_value_psi` shares. These tests pin monitor == graded query:
 
 1. batch pin: freeze bounds + reference histogram from the graded
    query's own reference half, bin the current half batch-side, score
