@@ -1,37 +1,44 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
-Design (the Spark-side contract is real and tested; the codec calls are
-stubbed because no media libraries exist in this container):
-
 - A multimodal table is any DataFrame with a `binary` payload column
-  plus typed metadata columns (media_type, byte_len, format sniffed
-  from magic bytes).
-- Metadata extraction is pure column expressions (JVM-side).
-- Decode / feature-extract / resize / frame-sample run as Arrow-batched
-  `mapInPandas` — one Python worker per partition, whole Arrow record
-  batches per call, never row-at-a-time. At 100 TB the decode stage is
-  CPU-bound and embarrassingly parallel: `repartition` by size so every
-  task gets comparable byte volume, then pipeline decode → feature UDF
-  in one stage.
+  plus typed metadata columns (byte length, format sniffed from magic
+  bytes) — `with_binary_meta`, pure column expressions, JVM-side.
+- Every per-file stage — decode, feature extraction, resize, frame
+  sampling — runs through ONE Arrow loop, `_map_files`: `mapInPandas`
+  over (id, payload), whole Arrow record batches per call, never
+  row-at-a-time. Each stage only supplies a per-file function that
+  yields output rows in schema order.
 
-Codec-free formats are decoded FOR REAL through that same plumbing:
-`pcm16_stats` (WAV/PCM16 via numpy), `png_pixel_stats` (PNG via stdlib
-zlib inflate + scanline unfiltering), `gif_pixel_stats` (GIF via a
-from-scratch LZW decompressor — LZW is an algorithm, not a codec
-library), and `avi_frame_pixel_stats` (uncompressed-DIB AVI video:
-RIFF walk, bottom-up BGR frames, stride pad), plus `resize_image`
-(nearest-neighbor PNG resample, decode → numpy → re-encode).
-`decode_image` (JPEG/WebP — needs libjpeg) and `sample_frames`
-(codec'd video — needs ffmpeg) raise NotImplementedError
-(clearly-marked env-blocked stubs);
-`fake_decode_meta` is the deterministic stand-in used by tests to prove
-the batch plumbing (schema, Arrow batch shape, partition behavior).
+Codec-free formats are decoded FOR REAL: `pcm16_stats` (WAV/PCM16 via
+numpy), `png_pixel_stats` (PNG via stdlib zlib inflate + scanline
+unfiltering), `gif_pixel_stats` (GIF via a from-scratch LZW
+decompressor — LZW is an algorithm, not a codec library), and
+`avi_frame_pixel_stats` (uncompressed-DIB AVI video: RIFF walk,
+bottom-up BGR frames, stride pad), plus `resize_image`
+(nearest-neighbor PNG resample, decode → numpy → re-encode). The
+decoders (`decode_png_gray8`, `decode_gif_frame`, `decode_avi_dib`)
+report every malformed or truncated payload as `ValueError`.
+Codec-bound formats (JPEG, H.264) are out of reach without a codec
+library; `fake_feature_vector` and `fake_sample_frames` are
+hash-derived stand-ins for an embedding UDF and a frame sampler that a
+DuckDB oracle can re-derive.
+
+Spreading rule: operators never spread. A caller spreads bare ids
+before payload synthesis, or heals right after reading a real media
+zone — both with `operators.spread.heal_scan_width` — so the Arrow
+stage runs in the task set of its input and payload bytes never cross
+an exchange.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,39 +66,56 @@ def with_binary_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-DECODED_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("byte_len", T.IntegerType()),
-        T.StructField("checksum_hex", T.StringType()),
-        T.StructField("fake_width", T.IntegerType()),
-        T.StructField("fake_height", T.IntegerType()),
-    ]
-)
+_PANDAS_DTYPES = {T.LongType: "int64", T.IntegerType: "int32"}
 
 
-def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real JPEG/WebP decode (PIL/libjpeg) — NOT AVAILABLE in this
-    environment. PNG and GIF, which need no codec library, ARE decoded
-    for real by `png_pixel_stats` / `gif_pixel_stats` below through
-    the identical Arrow plumbing; `fake_decode_meta` exercises the
-    same signature for the codec-gated formats."""
-    raise NotImplementedError(
-        "compressed-image codecs are not installed in this container; "
-        "PNG/GIF decode for real via png_pixel_stats/gif_pixel_stats, "
-        "other formats via fake_decode_meta plumbing tests"
-    )
+def _map_files(
+    df: DataFrame,
+    per_file: Callable[[int, bytes], Iterable[tuple]],
+    schema: T.StructType,
+    id_col: str,
+    payload_col: str,
+) -> DataFrame:
+    """The one Arrow loop of the media family: `mapInPandas` over
+    (id_col, payload_col), calling ``per_file(id, payload_bytes)`` for
+    every file. It yields zero or more output rows, each a tuple in
+    `schema` order. Each batch's rows become typed pandas columns:
+    LongType → int64, IntegerType → int32, anything else object."""
+    names = schema.names
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType), "object") for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                row
+                for mid, payload in zip(pdf[id_col], pdf[payload_col])
+                for row in per_file(int(mid), bytes(payload))
+            ]
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(list(col), dtype=dtype)
+                    for name, col, dtype in zip(names, cols, dtypes)
+                }
+            )
+
+    return df.select(id_col, payload_col).mapInPandas(batches, schema=schema)
+
+
+def _unpack(fmt: str, buf: bytes, offset: int) -> tuple:
+    """`struct.unpack_from` that reports a short buffer as the
+    decoders' ValueError, never `struct.error`."""
+    if offset + struct.calcsize(fmt) > len(buf):
+        raise ValueError(
+            f"truncated: {fmt!r} at byte {offset} runs past {len(buf)} bytes"
+        )
+    return struct.unpack_from(fmt, buf, offset)
 
 
 def encode_png_gray8(px) -> bytes:
     """Encode an int (h, w) pixel array as a spec-correct 8-bit
     grayscale PNG with the stdlib only: filter-type-0 scanlines,
     one zlib-compressed IDAT, true chunk CRC-32s."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     arr = np.asarray(px)
     h, w = arr.shape
     raw = b"".join(
@@ -128,12 +152,9 @@ def resize_image(
     floor(dst·src_extent/dst_extent) — integer arithmetic, so the
     mapping is deterministic on any engine), and re-encoded as
     spec-correct PNGs, binary in → binary out, one row per input,
-    through the same Arrow `mapInPandas` plumbing as the decoders.
-    This is the thumbnail/normalize stage a multimodal lake runs
-    before feature extraction; codec-bound formats (JPEG & co) remain
-    env-blocked in `decode_image`."""
-    import numpy as np
-
+    through the same Arrow loop as the decoders. This is the
+    thumbnail/normalize stage a multimodal lake runs before feature
+    extraction."""
     # output columns are named after the CALLER's id/payload columns —
     # a caller passing id_col="doc_id" gets "doc_id" back, not a
     # silent rename to "media_id"
@@ -144,65 +165,14 @@ def resize_image(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w0, h0, px = decode_png_gray8(bytes(payload))
-                rows = (np.arange(height) * h0) // height
-                cols = (np.arange(width) * w0) // width
-                resized = px[np.ix_(rows, cols)]
-                ids.append(int(mid))
-                payloads.append(encode_png_gray8(resized))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    payload_col: pd.Series(payloads, dtype="object"),
-                }
-            )
+    def resize(mid: int, buf: bytes):
+        w0, h0, px = decode_png_gray8(buf)
+        rows = (np.arange(height) * h0) // height
+        cols = (np.arange(width) * w0) // width
+        yield mid, encode_png_gray8(px[np.ix_(rows, cols)])
 
-    return _spread(df.select(id_col, payload_col), id_col).mapInPandas(
-        batches, schema=out_schema
-    )
+    return _map_files(df, resize, out_schema, id_col, payload_col)
 
-
-def sample_frames(df: DataFrame, n_frames: int, payload_col: str = "payload") -> DataFrame:
-    """COMPRESSED-video frame sampling (H.264 & co) — NOT AVAILABLE
-    (needs ffmpeg). Uncompressed-DIB AVI video IS decoded for real by
-    `avi_frame_pixel_stats` below — container walk, bottom-up BGR
-    frames, stride handling — through the identical Arrow plumbing;
-    the row-expansion shape is also exercised by
-    `fake_sample_frames`."""
-    raise NotImplementedError(
-        "video codecs are not installed in this container; "
-        "uncompressed AVI decodes for real via avi_frame_pixel_stats, "
-        "codec'd formats via fake_sample_frames plumbing tests"
-    )
-
-
-def _spread(df: DataFrame, key_col: str) -> DataFrame:
-    """Pre-decode spread. Media payloads routinely arrive in a few
-    small splits (one manifest parquet, one tar index), which would
-    serialize the CPU-bound Arrow decode hop on one or two tasks —
-    the repartition-before-decode step the module docstring
-    prescribes, keyed so placement is deterministic (results are
-    placement-independent either way).
-
-    UNCONDITIONAL (r18): r17 gated this on the source's partition
-    COUNT (`df.rdd.getNumPartitions() >= defaultParallelism`) and it
-    was the round's worst regression (media_wav_rms 1.6→8.2 s at 32
-    cores, 8c/32c ratio 0.21): a scan can clear the count bar while
-    the payload BYTES concentrate in a few row-group-granularity
-    splits, so the decode hop serialized exactly as this docstring
-    warns — and the `.rdd` probe itself compiled a second physical
-    plan per call. The keyed exchange carries each payload once and
-    is the price of a balanced CPU-bound decode stage."""
-    sc = df.sparkSession.sparkContext
-    n = max(sc.defaultParallelism, 8)
-    return df.repartition(n, key_col)
-
-
-FEATURE_DIM = 16  # md5 digest bytes
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -215,28 +185,17 @@ FEATURE_SCHEMA = T.StructType(
 def fake_feature_vector(
     df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """Deterministic feature-extraction stage over `mapInPandas`: each
-    binary payload becomes a FEATURE_DIM-dim double vector (md5 digest
-    bytes / 255). Shape-identical to a real embedding-extraction UDF
-    (binary in, `array<double>` out, one row per input), so its output
-    feeds the similarity operators directly — and because the vector
-    is hash-derived it is reproducible in the DuckDB oracle."""
-    import hashlib
+    """Deterministic feature-extraction stage: each binary payload
+    becomes a 16-dim double vector (md5 digest bytes / 255).
+    Shape-identical to a real embedding-extraction UDF (binary in,
+    `array<double>` out, one row per input), so its output feeds the
+    similarity operators directly — and because the vector is
+    hash-derived it is reproducible in the DuckDB oracle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "vec": pdf[payload_col].map(
-                        lambda b: [
-                            x / 255.0 for x in hashlib.md5(bytes(b)).digest()
-                        ]
-                    ),
-                }
-            )
+    def features(mid: int, buf: bytes):
+        yield mid, [x / 255.0 for x in hashlib.md5(buf).digest()]
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return _map_files(df, features, FEATURE_SCHEMA, id_col, payload_col)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -256,29 +215,14 @@ def fake_sample_frames(
 ) -> DataFrame:
     """Deterministic frame-sampling stand-in: 1 input row → `n_frames`
     output rows (media_id, frame_idx, md5(payload || ':' || idx)) —
-    exercises the row-EXPANDING mapInPandas contract a real video
-    sampler has (output batches larger than input batches)."""
-    import hashlib
+    exercises the row-EXPANDING contract a real video sampler has
+    (output batches larger than input batches)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, sums = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                for i in range(n_frames):
-                    ids.append(int(mid))
-                    idxs.append(i)
-                    sums.append(
-                        hashlib.md5(bytes(payload) + f":{i}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_checksum": sums,
-                }
-            )
+    def frames(mid: int, buf: bytes):
+        for i in range(n_frames):
+            yield mid, i, hashlib.md5(buf + f":{i}".encode()).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _map_files(df, frames, FRAME_SCHEMA, id_col, payload_col)
 
 
 PCM_STATS_SCHEMA = T.StructType(
@@ -297,68 +241,28 @@ def pcm16_stats(
     id_col: str = "media_id",
     payload_col: str = "payload",
     data_offset: int = 44,
-    pre_spread: bool = True,
 ) -> DataFrame:
     """REAL audio decode — not a stub: 16-bit PCM needs no codec, so
     the sample data after the 44-byte WAV header is decoded with
-    `np.frombuffer(..., '<i2')` inside Arrow-batched `mapInPandas` and
-    reduced to per-file loudness stats (sample count, exact integer
-    energy Σv², peak |v|, micro-quantized RMS). This is the exact
-    plumbing the codec-gated image/video decoders document
-    (binary in → vectorized numpy → typed rows out), exercised END TO
-    END on bytes that are genuinely decoded, and it is what an audio
-    lake runs for silence/clipping screens before anything ships to
-    GPUs.
+    `np.frombuffer(..., '<i2')` inside the Arrow loop and reduced to
+    per-file loudness stats (sample count, exact integer energy Σv²,
+    peak |v|, micro-quantized RMS) — what an audio lake runs for
+    silence/clipping screens before anything ships to GPUs.
 
     Determinism: Σv² and peak are exact integers; RMS is
     sqrt(sum_sq/n) — one IEEE divide (sum_sq < 2^53, exactly
     representable) and one correctly-rounded sqrt on identical inputs
     in any engine — quantized to integer micro-units."""
-    import math
 
-    import numpy as np
+    def stats(mid: int, buf: bytes):
+        wide = np.frombuffer(buf[data_offset:], dtype="<i2").astype(np.int64)
+        n = int(wide.size)
+        ss = int((wide * wide).sum())
+        peak = int(np.abs(wide).max()) if n else 0
+        rms = int(math.floor(math.sqrt(ss / n) * 1e6 + 0.5)) if n else 0
+        yield mid, n, ss, peak, rms
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ns, sqs, pks, rms = [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                samples = np.frombuffer(
-                    bytes(payload)[data_offset:], dtype="<i2"
-                )
-                n = int(samples.size)
-                wide = samples.astype(np.int64)
-                ss = int((wide * wide).sum()) if n else 0
-                pk = int(np.abs(wide).max()) if n else 0
-                r = (
-                    int(math.floor(math.sqrt(ss / n) * 1e6 + 0.5))
-                    if n
-                    else 0
-                )
-                ids.append(int(mid))
-                ns.append(n)
-                sqs.append(ss)
-                pks.append(pk)
-                rms.append(r)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "sum_sq": pd.Series(sqs, dtype="int64"),
-                    "peak": pd.Series(pks, dtype="int64"),
-                    "rms_micro": pd.Series(rms, dtype="int64"),
-                }
-            )
-
-    src = df.select(id_col, payload_col)
-    if pre_spread:
-        # pre_spread=False lets a caller that spread the SOURCE rows
-        # before an in-plan payload synthesis (queries/multimodal.py
-        # r18 pattern, first used by media_gif_pixels) chain decode in
-        # the same task set — the synthesized bytes never cross an
-        # exchange. Explicit caller contract, NOT the r17 runtime
-        # count-gate.
-        src = _spread(src, id_col)
-    return src.mapInPandas(batches, schema=PCM_STATS_SCHEMA)
+    return _map_files(df, stats, PCM_STATS_SCHEMA, id_col, payload_col)
 
 
 PNG_PIXEL_SCHEMA = T.StructType(
@@ -375,7 +279,6 @@ PNG_PIXEL_SCHEMA = T.StructType(
 )
 
 
-
 def decode_png_gray8(buf: bytes):
     """Decode an 8-bit grayscale PNG with the stdlib only: chunk walk
     with CRC-32 verification, zlib inflate of the IDAT stream, and
@@ -383,39 +286,36 @@ def decode_png_gray8(buf: bytes):
     (width, height, pixels) with pixels an int64 (h, w) ndarray —
     shared by `png_pixel_stats` (stats) and `resize_image`
     (resample + re-encode)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if buf[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG: bad signature")
     pos = 8
     width = height = None
     idat = b""
     while pos + 12 <= len(buf):
-        (length,) = struct.unpack(">I", buf[pos : pos + 4])
+        (length,) = _unpack(">I", buf, pos)
+        end = pos + 12 + length
+        if end > len(buf):
+            raise ValueError("truncated PNG: chunk runs past the payload")
         ctype = buf[pos + 4 : pos + 8]
-        body = buf[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack(
-            ">I", buf[pos + 8 + length : pos + 12 + length]
-        )
+        body = buf[pos + 8 : end - 4]
+        (crc,) = _unpack(">I", buf, end - 4)
         if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
             raise ValueError(f"bad CRC in {ctype!r} chunk")
         if ctype == b"IHDR":
-            width, height, depth, color = struct.unpack(
-                ">IIBB", body[:10]
-            )
+            width, height, depth, color = _unpack(">IIBB", body, 0)
             if depth != 8 or color != 0:
                 raise ValueError("only 8-bit grayscale is supported")
         elif ctype == b"IDAT":
             idat += body
         elif ctype == b"IEND":
             break
-        pos += 12 + length
+        pos = end
     if width is None:
         raise ValueError("no IHDR chunk")
-    raw = zlib.decompress(idat)
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"corrupt IDAT stream: {e}") from e
     stride = width + 1
     if len(raw) != height * stride:
         raise ValueError("decompressed length != height*(width+1)")
@@ -463,49 +363,29 @@ def png_pixel_stats(
     df: DataFrame,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    pre_spread: bool = True,
 ) -> DataFrame:
     """REAL image decode — not a stub: PNG's container needs no codec
-    library, only the stdlib. Per file, inside Arrow-batched
-    `mapInPandas`: walk the chunk stream (verifying every chunk's
-    CRC-32), inflate the concatenated IDAT payload with `zlib`,
-    reverse the per-scanline filters (all five standard types — None /
-    Sub / Up / Average / Paeth), and reduce the reconstructed pixels
-    to exact integer stats (count, Σv, min, max, Σv²). Supports 8-bit
-    grayscale (color type 0) — the sibling of `pcm16_stats`' PCM16
-    path and the same plumbing the codec-gated JPEG/video decoders
-    document.
+    library, only the stdlib. Per file, inside the Arrow loop: walk
+    the chunk stream (verifying every chunk's CRC-32), inflate the
+    concatenated IDAT payload with `zlib`, reverse the per-scanline
+    filters (all five standard types — None / Sub / Up / Average /
+    Paeth), and reduce the reconstructed pixels to exact integer stats
+    (count, Σv, min, max, Σv²). Supports 8-bit grayscale (color type
+    0) — the sibling of `pcm16_stats`' PCM16 path.
 
     Determinism: every stat is an exact integer on exactly the bytes
     the writer framed, so a formula-derived oracle that never touches
     the binary proves writer framing, chunk CRCs, inflate, AND
     unfiltering agree pixel-for-pixel."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in PNG_PIXEL_SCHEMA.names}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, px = decode_png_gray8(bytes(payload))
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["px_sum"].append(int(px.sum()))
-                rows["px_min"].append(int(px.min()))
-                rows["px_max"].append(int(px.max()))
-                rows["px_sum_sq"].append(int((px * px).sum()))
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(v, dtype="int64")
-                    for k, v in rows.items()
-                }
-            )
+    def stats(mid: int, buf: bytes):
+        w, h, px = decode_png_gray8(buf)
+        yield (
+            mid, w, h, w * h,
+            int(px.sum()), int(px.min()), int(px.max()), int((px * px).sum()),
+        )
 
-    src = df.select(id_col, payload_col)
-    if pre_spread:
-        # see pcm16_stats: explicit already-spread caller contract
-        src = _spread(src, id_col)
-    return src.mapInPandas(batches, schema=PNG_PIXEL_SCHEMA)
+    return _map_files(df, stats, PNG_PIXEL_SCHEMA, id_col, payload_col)
 
 
 AVI_FRAME_SCHEMA = T.StructType(
@@ -525,158 +405,104 @@ AVI_FRAME_SCHEMA = T.StructType(
 )
 
 
+def _riff_chunks(buf: bytes, pos: int, end: int):
+    """(fourcc, body offset, size) of each RIFF chunk in buf[pos:end];
+    a chunk that runs past its parent raises ValueError."""
+    while pos + 8 <= end:
+        fourcc = buf[pos : pos + 4]
+        (size,) = _unpack("<I", buf, pos + 4)
+        body = pos + 8
+        if body + size > end:
+            raise ValueError(f"truncated AVI: {fourcc!r} chunk runs past its parent")
+        yield fourcc, body, size
+        pos = body + size + (size & 1)  # RIFF chunks are word-aligned
+
+
+def decode_avi_dib(buf: bytes) -> tuple[int, int, int, list[np.ndarray]]:
+    """Decode an uncompressed 24-bit DIB AVI with the stdlib + numpy:
+    walk the RIFF chunk tree (word-aligned, as the spec requires),
+    cross-check the three places the container states its geometry
+    (avih dwWidth/dwHeight/dwTotalFrames, strh dwLength, strf
+    BITMAPINFOHEADER), then decode every '00db' frame — bottom-up
+    scanline order, BGR byte order, 4-byte row stride padding. Returns
+    (width, height, n_frames, frames) with each frame an int64
+    (h, w, 3) BGR array in image (top-down) row order."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
+        raise ValueError("not an AVI: bad RIFF form")
+    headers: dict[bytes, bytes] = {}
+    frames: list[bytes] = []
+
+    def walk(pos: int, end: int) -> None:
+        for fourcc, body, size in _riff_chunks(buf, pos, end):
+            if fourcc == b"LIST":
+                walk(body + 4, body + size)
+            elif fourcc == b"00db":
+                frames.append(buf[body : body + size])
+            elif fourcc in (b"avih", b"strh", b"strf"):
+                headers[fourcc] = buf[body : body + size]
+
+    walk(12, len(buf))
+    if len(headers) != 3:
+        raise ValueError("missing avih/strh/strf header chunk")
+    avih, strh, strf = headers[b"avih"], headers[b"strh"], headers[b"strf"]
+    (total_frames,) = _unpack("<I", avih, 16)
+    avi_w, avi_h = _unpack("<II", avih, 32)
+    if strh[:4] != b"vids":
+        raise ValueError("first stream is not video")
+    (strh_len,) = _unpack("<I", strh, 32)
+    bi_w, bi_h = _unpack("<ii", strf, 4)
+    (bit_count,) = _unpack("<H", strf, 14)
+    (compression,) = _unpack("<I", strf, 16)
+    if bit_count != 24 or compression != 0:
+        raise ValueError("only uncompressed 24-bit DIB is supported")
+    if (avi_w, avi_h) != (bi_w, bi_h) or total_frames != strh_len:
+        raise ValueError("avih / strh / strf geometry disagrees")
+    if total_frames != len(frames):
+        raise ValueError(
+            f"header claims {total_frames} frames, movi has {len(frames)}"
+        )
+    stride = (3 * bi_w + 3) // 4 * 4
+    decoded = []
+    for data in frames:
+        if len(data) != stride * bi_h:
+            raise ValueError("frame byte length != stride*height")
+        rows = np.frombuffer(data, dtype=np.uint8).reshape(bi_h, stride)
+        # positive biHeight = bottom-up storage: flip to image order,
+        # then drop the stride pad and split interleaved BGR
+        img = rows[::-1, : 3 * bi_w].reshape(bi_h, bi_w, 3)
+        decoded.append(img.astype(np.int64))
+    return bi_w, bi_h, total_frames, decoded
+
+
 def avi_frame_pixel_stats(
     df: DataFrame,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    pre_spread: bool = True,
 ) -> DataFrame:
     """REAL video decode — not a stub: uncompressed 24-bit DIB frames
     in a RIFF/AVI container need no codec, so the video member of the
     decode family joins `pcm16_stats` (WAV) and `png_pixel_stats`
-    (PNG) as a genuine decoder through the identical Arrow plumbing.
-    Per file, inside Arrow-batched `mapInPandas`: walk the RIFF chunk
-    tree (word-aligned, as the spec requires), cross-check the three
-    places the container states its geometry (avih dwWidth/dwHeight/
-    dwTotalFrames, strh dwLength, strf BITMAPINFOHEADER), then decode
-    every '00db' frame — bottom-up scanline order, BGR byte order,
-    4-byte row stride padding, the three DIB-isms a naive reader gets
-    wrong — into exact integer per-frame stats. `top_row_sum` is over
-    the IMAGE's top row (the LAST stored scanline), so a decoder that
-    skips the vertical flip fails the oracle; the per-channel sums
-    fail it on BGR/RGB confusion; stride handling fails it on any
-    width not divisible by 4.
+    (PNG) as a genuine decoder (`decode_avi_dib`) in the same Arrow
+    loop, reducing every frame to exact integer stats. `top_row_sum`
+    is over the IMAGE's top row (the LAST stored scanline), so a
+    decoder that skips the vertical flip fails the oracle; the
+    per-channel sums fail it on BGR/RGB confusion; stride handling
+    fails it on any width not divisible by 4.
 
     1 input row → n_frames output rows (the row-expansion contract of
-    `sample_frames`, delivered for real). Compressed codecs (H.264 &
-    co) remain env-blocked in `sample_frames`."""
-    import struct
+    `fake_sample_frames`, delivered for real)."""
 
-    import numpy as np
-
-    def chunks(buf: bytes, pos: int, end: int):
-        while pos + 8 <= end:
-            fourcc = buf[pos : pos + 4]
-            (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            yield fourcc, pos + 8, size
-            pos += 8 + size + (size & 1)  # RIFF chunks are word-aligned
-
-    def decode_one(buf: bytes) -> tuple[int, int, int, list[np.ndarray]]:
-        if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-            raise ValueError("not an AVI: bad RIFF form")
-        avih = strh = strf = None
-        frames: list[bytes] = []
-
-        def walk_list(pos: int, end: int) -> None:
-            nonlocal avih, strh, strf
-            for fourcc, body, size in chunks(buf, pos, end):
-                if fourcc == b"LIST":
-                    walk_list(body + 4, body + size)
-                elif fourcc == b"avih":
-                    avih = buf[body : body + size]
-                elif fourcc == b"strh":
-                    strh = buf[body : body + size]
-                elif fourcc == b"strf":
-                    strf = buf[body : body + size]
-                elif fourcc == b"00db":
-                    frames.append(buf[body : body + size])
-
-        walk_list(12, len(buf))
-        if avih is None or strh is None or strf is None:
-            raise ValueError("missing avih/strh/strf header chunk")
-        total_frames, = struct.unpack("<I", avih[16:20])
-        avi_w, avi_h = struct.unpack("<II", avih[32:40])
-        if strh[:4] != b"vids":
-            raise ValueError("first stream is not video")
-        strh_len, = struct.unpack("<I", strh[32:36])
-        bi_w, bi_h = struct.unpack("<ii", strf[4:12])
-        bit_count, = struct.unpack("<H", strf[14:16])
-        compression, = struct.unpack("<I", strf[16:20])
-        if bit_count != 24 or compression != 0:
-            raise ValueError("only uncompressed 24-bit DIB is supported")
-        if (avi_w, avi_h) != (bi_w, bi_h) or total_frames != strh_len:
-            raise ValueError("avih / strh / strf geometry disagrees")
-        if total_frames != len(frames):
-            raise ValueError(
-                f"header claims {total_frames} frames, movi has {len(frames)}"
-            )
-        stride = (3 * bi_w + 3) // 4 * 4
-        decoded = []
-        for data in frames:
-            if len(data) != stride * bi_h:
-                raise ValueError("frame byte length != stride*height")
-            rows = np.frombuffer(data, dtype=np.uint8).reshape(bi_h, stride)
-            # positive biHeight = bottom-up storage: flip to image order,
-            # then drop the stride pad and split interleaved BGR
-            img = rows[::-1, : 3 * bi_w].reshape(bi_h, bi_w, 3)
-            decoded.append(img.astype(np.int64))
-        return bi_w, bi_h, total_frames, decoded
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in AVI_FRAME_SCHEMA.names}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, nf, frames = decode_one(bytes(payload))
-                for fi, img in enumerate(frames):
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(fi)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_frames"].append(nf)
-                    rows["sum_b"].append(int(img[:, :, 0].sum()))
-                    rows["sum_g"].append(int(img[:, :, 1].sum()))
-                    rows["sum_r"].append(int(img[:, :, 2].sum()))
-                    rows["px_min"].append(int(img.min()))
-                    rows["px_max"].append(int(img.max()))
-                    rows["top_row_sum"].append(int(img[0].sum()))
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(v, dtype="int64")
-                    for k, v in rows.items()
-                }
+    def stats(mid: int, buf: bytes):
+        w, h, nf, frames = decode_avi_dib(buf)
+        for fi, img in enumerate(frames):
+            yield (
+                mid, fi, w, h, nf,
+                int(img[:, :, 0].sum()), int(img[:, :, 1].sum()),
+                int(img[:, :, 2].sum()), int(img.min()), int(img.max()),
+                int(img[0].sum()),
             )
 
-    src = df.select(id_col, payload_col)
-    if pre_spread:
-        # see pcm16_stats: explicit already-spread caller contract
-        src = _spread(src, id_col)
-    return src.mapInPandas(batches, schema=AVI_FRAME_SCHEMA)
-
-
-def fake_decode_meta(
-    df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Deterministic stand-in decoder over `mapInPandas`.
-
-    Consumes Arrow batches of (id, payload-bytes), emits typed metadata
-    rows: md5 checksum and fake dimensions derived from the payload
-    bytes. Shape-identical to what a real decoder stage returns, so the
-    partitioning / schema / batch contract is fully tested.
-    """
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "byte_len": payloads.map(len).astype("int32"),
-                    "checksum_hex": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "fake_width": payloads.map(
-                        lambda b: (len(b) % 640) + 1
-                    ).astype("int32"),
-                    "fake_height": payloads.map(
-                        lambda b: (bytes(b)[0] if len(b) else 0) + 1
-                    ).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        batches, schema=DECODED_META_SCHEMA
-    )
+    return _map_files(df, stats, AVI_FRAME_SCHEMA, id_col, payload_col)
 
 
 GIF_PIXEL_SCHEMA = T.StructType(
@@ -755,10 +581,6 @@ def encode_gif(idx, palette, min_code_size: int = 8) -> bytes:
     an (n, 3) palette: logical screen descriptor + global color table
     + one non-interlaced full-frame image, LZW-compressed via
     `lzw_encode_gif` and chopped into <=255-byte sub-blocks."""
-    import struct
-
-    import numpy as np
-
     idx = np.asarray(idx)
     h, w = idx.shape
     n = len(palette)
@@ -821,11 +643,9 @@ def _lzw_decode_gif(data: bytes, min_code_size: int, expected: int) -> list[int]
                 raise ValueError(
                     f"LZW overran {expected} pixels without an EOI code"
                 )
-            if prev is None:
+            if code in table:
                 entry = table[code]
-            elif code in table:
-                entry = table[code]
-            elif code == next_code:
+            elif prev is not None and code == next_code:
                 entry = prev + (prev[0],)  # the KwKwK case
             else:
                 raise ValueError(f"LZW code {code} out of sequence")
@@ -848,21 +668,16 @@ def decode_gif_frame(buf: bytes):
     Non-interlaced, global-palette images (the overwhelmingly common
     export shape); interlace or local tables raise rather than decode
     wrongly."""
-    import struct
-
-    import numpy as np
-
     if buf[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF: bad signature")
-    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", buf[6:13])
-    pos = 13
+    sw, sh, packed, _bg, _aspect = _unpack("<HHBBB", buf, 6)
     if not packed & 0x80:
         raise ValueError("no global color table")
     gct_n = 2 << (packed & 0x07)
-    palette = np.frombuffer(
-        buf[pos : pos + 3 * gct_n], dtype=np.uint8
-    ).reshape(gct_n, 3)
-    pos += 3 * gct_n
+    pos = 13 + 3 * gct_n
+    if pos > len(buf):
+        raise ValueError("truncated GIF: global color table")
+    palette = np.frombuffer(buf[13:pos], dtype=np.uint8).reshape(gct_n, 3)
     while pos < len(buf):
         block = buf[pos]
         if block == 0x21:  # extension: label + sub-blocks
@@ -873,9 +688,7 @@ def decode_gif_frame(buf: bytes):
                 raise ValueError("truncated GIF: unterminated extension")
             pos += 1
         elif block == 0x2C:  # image descriptor
-            left, top, w, h, ipacked = struct.unpack(
-                "<HHHHB", buf[pos + 1 : pos + 10]
-            )
+            left, top, w, h, ipacked = _unpack("<HHHHB", buf, pos + 1)
             pos += 10
             if ipacked & 0x80:
                 raise ValueError("local color tables are not supported")
@@ -883,6 +696,8 @@ def decode_gif_frame(buf: bytes):
                 raise ValueError("interlaced GIFs are not supported")
             if (left, top, w, h) != (0, 0, sw, sh):
                 raise ValueError("sub-rectangle frames are not supported")
+            if pos >= len(buf):
+                raise ValueError("truncated GIF: missing LZW code size")
             min_code_size = buf[pos]
             pos += 1
             data = bytearray()
@@ -909,45 +724,24 @@ def gif_pixel_stats(
     df: DataFrame,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    pre_spread: bool = True,
 ) -> DataFrame:
     """REAL GIF decode — LZW needs no codec library, so the third
     image-family member joins WAV/PNG/AVI as a genuine decoder in the
-    same Arrow plumbing: per file, decompress the first frame's LZW
-    index stream, map indices through the global color table, and
-    reduce to exact integer per-channel sums + index extrema. Graded
-    as the `media_gif_pixels` registry query (queries/multimodal.py):
-    an ENCODER Arrow stage (`lzw_encode_gif`/`encode_gif` — written
+    same Arrow loop: per file, decompress the first frame's LZW index
+    stream, map indices through the global color table, and reduce to
+    exact integer per-channel sums + index extrema. Graded as the
+    `media_gif_pixels` registry query (queries/multimodal.py): an
+    ENCODER Arrow stage (`lzw_encode_gif`/`encode_gif` — written
     independently of this decoder) synthesizes formula-derived GIFs
-    and a DuckDB oracle re-derives the stats from the formula —
-    variable-width LZW emission is inherently sequential, so unlike
-    WAV/PNG/AVI the writer runs in an Arrow stage, not in column
-    expressions."""
-    import numpy as np
+    and a DuckDB oracle re-derives the stats from the formula."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in GIF_PIXEL_SCHEMA.names}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, idx, palette = decode_gif_frame(bytes(payload))
-                px = palette[idx.reshape(-1)].astype(np.int64)
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                rows["sum_r"].append(int(px[:, 0].sum()))
-                rows["sum_g"].append(int(px[:, 1].sum()))
-                rows["sum_b"].append(int(px[:, 2].sum()))
-                rows["idx_min"].append(int(idx.min()))
-                rows["idx_max"].append(int(idx.max()))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def stats(mid: int, buf: bytes):
+        w, h, idx, palette = decode_gif_frame(buf)
+        px = palette[idx.reshape(-1)].astype(np.int64)
+        yield (
+            mid, w, h, w * h,
+            int(px[:, 0].sum()), int(px[:, 1].sum()), int(px[:, 2].sum()),
+            int(idx.min()), int(idx.max()),
+        )
 
-    src = df.select(id_col, payload_col)
-    if pre_spread:
-        # pre_spread=False lets a caller whose input is ALREADY spread
-        # (e.g. an upstream Arrow encode stage) chain decode in the
-        # same task set with no second exchange
-        src = _spread(src, id_col)
-    return src.mapInPandas(batches, schema=GIF_PIXEL_SCHEMA)
+    return _map_files(df, stats, GIF_PIXEL_SCHEMA, id_col, payload_col)

@@ -44,6 +44,10 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame
 
+# The heal fires when the layout's split ceiling is below this
+# fraction of the default parallelism.
+MIN_FRACTION = 0.5
+
 
 @lru_cache(maxsize=4096)
 def _file_split_ceiling(path: str) -> int:
@@ -63,10 +67,13 @@ def _file_split_ceiling(path: str) -> int:
 
 
 def effective_scan_splits(df: DataFrame) -> int | None:
-    """Upper bound on the frame's scan parallelism from its source
-    file layout: sum of per-file row-group counts. None when the
-    frame has no resolvable input files (non-file source, or already
-    behind an exchange/checkpoint) — callers must not heal then."""
+    """Upper bound on the scan parallelism of a frame read straight
+    from files: the sum of per-file row-group counts over EVERY file
+    scan under `df`. None only when `df` has no input files (local
+    relations, non-file sources). It does not see exchanges,
+    checkpoints or joins above the scan — the footers are summed all
+    the same — so call it right after the read (a projection or
+    filter on top is fine)."""
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — e.g. streaming / local relations
@@ -76,22 +83,24 @@ def effective_scan_splits(df: DataFrame) -> int | None:
     return sum(_file_split_ceiling(f) for f in files)
 
 
-def heal_scan_width(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
-    """Return `df` repartitioned to the default parallelism when its
-    source layout caps scan parallelism below ``min_fraction`` of the
-    cores; `df` unchanged otherwise.
+def heal_scan_width(df: DataFrame) -> DataFrame:
+    """Return `df` round-robin repartitioned to the default
+    parallelism when its source layout caps scan parallelism below
+    `MIN_FRACTION` of the cores; `df` unchanged otherwise.
 
     Call it immediately after the read, on frames whose downstream
     map-side work is worth spreading (heavy projections, probes,
-    tokenization, partial aggregation over many rows). The exchange it
-    inserts carries the scan output once; on any multi-row-group /
-    multi-file zone the gate never fires.
+    tokenization, partial aggregation over many rows, media payload
+    synthesis and decode). The exchange it inserts carries the scan
+    output once — project to the columns the work needs first (the
+    media queries heal bare ids); on any multi-row-group / multi-file
+    zone the gate never fires.
     """
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if n <= 1:
         return df
     splits = effective_scan_splits(df)
-    if splits is None or splits >= max(1, int(n * min_fraction)):
+    if splits is None or splits >= max(1, int(n * MIN_FRACTION)):
         return df
     return df.repartition(n)

@@ -35,6 +35,12 @@ GRADING_PRIORITY: tuple[str, ...] = (
     "dedup_semantic_clusters",
     "events_hourly_anomaly",
     "segment_value_psi",
+    "media_wav_rms",
+    "media_png_pixels",
+    "media_avi_frames",
+    "media_gif_pixels",
+    "media_feature_knn",
+    "media_frame_sample",
     # -- latest row r7 --
     "pairs_via_hof",
     "user_spend_salted",
@@ -79,12 +85,6 @@ GRADING_PRIORITY: tuple[str, ...] = (
     "doc_token_stats",
     "doc_chunk_windows",
     "doc_ngram_contamination",
-    "doc_length_histogram",
-    "doc_winnowing_fingerprint",
-    "embedding_scalar_quantize",
-    "embedding_random_projection",
-    "events_jsonl_source_scan",
-    "events_rolling_value_quantiles",
 )
 
 

@@ -15,6 +15,7 @@ from ..operators.multimodal import (
     with_binary_meta,
 )
 from ..operators.similarity import cosine_sql, knn_bruteforce
+from ..operators.spread import heal_scan_width
 from ..sources import load_table
 from . import QuerySpec
 
@@ -288,18 +289,16 @@ def media_wav_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This closes the media family's loop: `media_wav_meta` proves the
     header parse, this proves the PAYLOAD decode — real decode where
-    no codec is needed, with the same batch plumbing the env-gated
-    image/video decoders stub. Scale: one keyed spread of the BARE
-    doc_id rows, then map-only synthesis + the Arrow hop in the same
-    task set (r18, the media_gif_pixels pattern: the synthesized
-    payload bytes never cross an exchange, and the byte-expression
-    synthesis — formerly serialized on the single scan task of a
-    narrow documents file — parallelizes); stats are per-file, no
-    shuffle until the output sort."""
-    from ..operators.multimodal import _spread, pcm16_stats
+    no codec is needed. Scale: `heal_scan_width` spreads the BARE
+    doc_id rows when the documents footers cap the scan below half the
+    cores, then map-only synthesis + the Arrow hop run in the same
+    task set (the synthesized payload bytes never cross an exchange,
+    and the byte-expression synthesis parallelizes); stats are
+    per-file, no shuffle until the output sort."""
+    from ..operators.multimodal import pcm16_stats
 
-    docs = _spread(
-        load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
+    docs = heal_scan_width(
+        load_table(spark, sf_dir, "documents").select("doc_id")
     )
     n = (F.col("doc_id") % 200 + 50).cast("bigint")
     # sample k: v = (doc_id*131 + k*7919) % 65536 − 32768; stored LE
@@ -340,7 +339,7 @@ def media_wav_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = docs.select(
         F.col("doc_id").alias("media_id"), payload.alias("payload")
     )
-    return pcm16_stats(synth, pre_spread=False).orderBy("media_id")
+    return pcm16_stats(synth).orderBy("media_id")
 
 
 MEDIA_WAV_RMS_SQL = """
@@ -393,15 +392,14 @@ def media_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle never touches the binary: it re-derives every
     stat from the pixel formula, so a hash match proves the byte
     framing, both checksums, the inflate, AND the unfiltering agree
-    pixel-for-pixel. Scale: one keyed spread of the BARE doc_id rows,
-    then map-only synthesis + the Arrow hop in the same task set
-    (r18, the media_gif_pixels pattern — payload bytes never cross an
-    exchange); stats are per-file, no shuffle until the output
-    sort."""
-    from ..operators.multimodal import _spread, png_pixel_stats
+    pixel-for-pixel. Scale: as `media_wav_rms` — the bare doc_id rows
+    are healed, then map-only synthesis + the Arrow hop in the same
+    task set (payload bytes never cross an exchange); stats are
+    per-file, no shuffle until the output sort."""
+    from ..operators.multimodal import png_pixel_stats
 
-    docs = _spread(
-        load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
+    docs = heal_scan_width(
+        load_table(spark, sf_dir, "documents").select("doc_id")
     )
     doc_id = F.col("doc_id").cast("bigint")
     width = doc_id % 8 + 4
@@ -482,7 +480,7 @@ def media_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth = docs.select(
         F.col("doc_id").alias("media_id"), payload.alias("payload")
     )
-    return png_pixel_stats(synth, pre_spread=False).orderBy("media_id")
+    return png_pixel_stats(synth).orderBy("media_id")
 
 
 MEDIA_PNG_PIXELS_SQL = """
@@ -530,9 +528,11 @@ def media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle never touches the binary: it re-derives every
     stat from the pixel formula. 1 doc → n_frames rows (the
     frame-expansion contract `media_frame_sample` fakes, now real).
-    Compressed video (H.264 & co) remains the one env-gated stub.
-    Scale: map-only synthesis + one Arrow hop; per-frame stats,
-    no shuffle until the output sort.
+    Scale: as `media_wav_rms` — the bare doc_id rows are healed
+    BEFORE the payload synthesis, so the byte-expression work
+    parallelizes and the synthesized bytes never cross an exchange;
+    map-only synthesis + one Arrow hop, per-frame stats, no shuffle
+    until the output sort.
 
     Build cost (r9): the synthesis is composed as ONE Spark-SQL
     expression STRING in Python and handed to a single `selectExpr` —
@@ -543,13 +543,10 @@ def media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     referenced by column; Catalyst's CollapseProject inlines them, so
     the executed plan is unchanged — byte-identical output, same
     whole-stage-codegen'd expressions, ~20x cheaper to build."""
-    from ..operators.multimodal import _spread, avi_frame_pixel_stats
+    from ..operators.multimodal import avi_frame_pixel_stats
 
-    # r18, the media_gif_pixels pattern: spread the BARE doc_id rows
-    # BEFORE the payload synthesis so the byte-expression work
-    # parallelizes and the synthesized bytes never cross an exchange
-    docs = _spread(
-        load_table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
+    docs = heal_scan_width(
+        load_table(spark, sf_dir, "documents").select("doc_id")
     )
 
     def le_var(expr: str, nbytes: int) -> str:
@@ -651,9 +648,7 @@ def media_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     ))"""
     synth = g.selectExpr("media_id", f"{payload_sql} AS payload")
-    return avi_frame_pixel_stats(synth, pre_spread=False).orderBy(
-        "media_id", "frame_idx"
-    )
+    return avi_frame_pixel_stats(synth).orderBy("media_id", "frame_idx")
 
 
 MEDIA_AVI_FRAMES_SQL = """
@@ -707,21 +702,19 @@ def media_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the WAV/PNG/AVI writers, variable-width LZW emission is
     inherently sequential (each code's width depends on the table size
     at that instant), so the ENCODER runs in an Arrow `mapInPandas`
-    stage rather than column expressions; one `_spread` exchange feeds
-    both Arrow hops (encode chains straight into decode with
-    `pre_spread=False` — no second shuffle).
+    stage rather than column expressions; the healed id rows feed both
+    Arrow hops (encode chains straight into decode — no second
+    shuffle).
 
     The DuckDB oracle never touches bytes: it re-derives every stat
     from the index/palette formulas, so a hash match proves compressor
     and decompressor agree pixel-for-pixel through a real container.
     Scale: map-only synthesis, two pipelined Arrow hops, per-file
     stats; no shuffle after the spread until the output sort."""
-    from ..operators.multimodal import _spread, encode_gif, gif_pixel_stats
+    from ..operators.multimodal import encode_gif, gif_pixel_stats
 
     docs = load_table(spark, sf_dir, "documents")
-    params = _spread(
-        docs.select(F.col("doc_id").alias("media_id")), "media_id"
-    )
+    params = heal_scan_width(docs.select(F.col("doc_id").alias("media_id")))
 
     def encode(it):
         import numpy as np
@@ -754,7 +747,7 @@ def media_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     synth = params.mapInPandas(encode, schema="media_id long, payload binary")
-    return gif_pixel_stats(synth, pre_spread=False).orderBy("media_id")
+    return gif_pixel_stats(synth).orderBy("media_id")
 
 
 MEDIA_GIF_PIXELS_SQL = """

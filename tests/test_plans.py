@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from big_data_analytics_final_project_spark.plans import (
     assert_broadcast_join,
     assert_no_cartesian,
@@ -514,11 +516,10 @@ def test_drift_family_plan_shapes(spark):
 
 def test_gif_pixels_encode_decode_share_one_spread(spark):
     """r8 GIF round-trip: one documents scan; the encode Arrow stage
-    and the decode Arrow stage chain in the SAME task set (decode is
-    built with pre_spread=False), so the exchanges are exactly the
-    designed two — the shared pre-encode spread and the output sort —
-    and the plan carries TWO MapInPandas hops with no exchange
-    between them."""
+    and the decode Arrow stage chain in the SAME task set (operators
+    never spread), so the exchanges are exactly the designed two —
+    the shared pre-encode spread and the output sort — and the plan
+    carries TWO MapInPandas hops with no exchange between them."""
     df = _df(spark, "media_gif_pixels")
     plan = physical_plan(df)
     assert count_scans(df) == 1
@@ -528,15 +529,29 @@ def test_gif_pixels_encode_decode_share_one_spread(spark):
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2
 
 
-def test_avi_frames_decode_parallelized(spark):
-    """r7 AVI decode: one documents scan; exchanges are exactly the
-    designed two — the pre-decode spread (a tiny file arrives as one
-    split, and the CPU-bound Arrow hop must not serialize on a single
-    task) and the output sort."""
-    df = _df(spark, "media_avi_frames")
+@pytest.mark.parametrize(
+    "name",
+    ["media_wav_rms", "media_png_pixels", "media_avi_frames", "media_gif_pixels"],
+)
+def test_media_decode_spreads_ids_only(spark, name):
+    """Media decode family: one documents scan; exchanges are exactly
+    the designed two — the round-robin spread (a tiny file arrives as
+    one split, and the CPU-bound synthesis + Arrow hop must not
+    serialize on a single task) and the output sort. The spread's
+    child outputs ONLY the id column, so payload bytes never cross an
+    exchange."""
+    df = _df(spark, name)
+    plan = physical_plan(df)
     assert count_scans(df) == 1
-    assert count_shuffles(df) <= 2
-    assert "MapInPandas" in physical_plan(df)
+    assert count_shuffles(df) == 2
+    spread_inputs = re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: RoundRobinPartitioning\(",
+        plan,
+    )
+    assert len(spread_inputs) == 1, plan
+    assert re.fullmatch(r"(doc_id|media_id)#\d+L", spread_inputs[0]), plan
+    assert "MapInPandas" in plan
 
 
 def test_priority_sample_take_ordered_no_global_sort(spark):

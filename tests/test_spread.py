@@ -6,6 +6,7 @@ an unchanged plan."""
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -49,8 +50,9 @@ def test_effective_splits_counts_row_groups(spark, narrow_path, wide_path):
 def test_effective_splits_none_for_non_scan(spark):
     local = spark.createDataFrame([(1,)], "a: bigint")
     assert effective_scan_splits(local) is None
-    # behind an exchange the frame still resolves its input files —
-    # the heal is documented for use immediately after the read
+    # a local relation has no input files, exchange or not; a FILE
+    # scan behind an exchange would still report its footers, which is
+    # why callers heal right after the read
     assert effective_scan_splits(local.repartition(2)) is None
 
 
@@ -58,10 +60,9 @@ def test_heal_fires_on_narrow_layout(spark, narrow_path):
     df = spark.read.parquet(narrow_path)
     healed = heal_scan_width(df)
     n = spark.sparkContext.defaultParallelism
-    assert "Exchange RoundRobinPartitioning" in healed._jdf.queryExecution().toString() or (
-        f"rebalance" in healed._jdf.queryExecution().toString().lower()
-        or healed.rdd.getNumPartitions() == n
-    )
+    plan = healed._jdf.queryExecution().executedPlan().toString()
+    # exactly one spread exchange, at exactly the default parallelism
+    assert re.findall(r"Exchange RoundRobinPartitioning\((\d+)\)", plan) == [str(n)], plan
     # row-identical
     assert sorted(r.k for r in healed.collect()) == list(range(1000))
 
